@@ -11,9 +11,10 @@ to declarative DataFrame plans:
 - single fact by id                                  (Q13)
 
 Everything is built-in Column expressions, so Catalyst gets the whole plan:
-cuts push down to the Parquet scan, aggregates are partial+final hash aggs,
-and the summary+cells envelope is ONE grouping-sets pass (no second scan) —
-the properties that keep these queries cheap at 100 TB.
+cuts push down to the Parquet scan and aggregates are partial+final hash
+aggs. The summary+cells envelope is two plain plans over the cut cell: a
+global aggregate (summary and cell count) and the grouped, ordered, paged
+cells. Nothing is cached between them.
 """
 
 from __future__ import annotations
@@ -173,53 +174,24 @@ class QueryEngine:
         """``/cube/<c>/aggregate`` response: ``{summary, cells,
         total_cell_count}`` (Q11).
 
-        Computed in ONE grouping-sets pass — `(drilldown...), ()` — so the
-        100 TB fact scan happens once; ``grouping_id`` separates the grand-
-        total row (summary) from the per-group rows (cells). Falls back to a
-        plain two-aggregate plan when there is no drilldown.
-
-        ``total_cell_count`` is an exact count of the (cached) cells frame
-        by default — one extra pass over cached group rows. For 100 TB
-        drilldowns with ~10^8 groups even that pass costs real time, so
-        ``approx_total=True`` rides an ``approx_count_distinct`` of the
-        drilldown tuple on the SAME grouping-sets aggregation (read off
-        the grand-total row, HLL++ default ~2% rsd) — zero extra jobs.
+        The summary is the cut cell's global aggregate, which yields one row
+        even over an empty cell (count 0, sums null — the same summary
+        ``/cell`` serves). With a drilldown, that same aggregate also counts
+        the distinct drilldown tuples as ``total_cell_count`` (NULL values
+        form a group, as in the cells' group-by), exactly or, with
+        ``approx_total=True``, by ``approx_count_distinct`` (HLL++, ~2% rsd);
+        the cells are the :meth:`cells` plan (order, then page).
         """
         cube = self.registry.get(spec.cube)
-        if not spec.drilldown:
-            summary_rows = self.cells(spec).collect()
-            summary = summary_rows[0].asDict() if summary_rows else {}
-            return {"summary": summary, "cells": [], "total_cell_count": 0}
-
-        df = self._apply_cuts(self._cell(cube), spec)
         aggs = [a.to_column() for a in cube.aggregates]
-        dims = [F.col(d) for d in spec.drilldown]
-        if approx_total:
-            aggs = aggs + [F.approx_count_distinct(F.struct(*dims))
-                           .alias("__acc__")]
-        both = (
-            df.groupingSets([dims, []], *dims)
-            .agg(*aggs, F.grouping_id().alias("__gid__"))
-        )
-        both = both.persist()
-        try:
-            summary_row = both.filter(F.col("__gid__") != 0).drop("__gid__") \
-                .drop(*spec.drilldown).collect()
-            cells_df = both.filter(F.col("__gid__") == 0).drop("__gid__")
-            if approx_total:
-                cells_df = cells_df.drop("__acc__")
-                total = (int(summary_row[0]["__acc__"])
-                         if summary_row else 0)
-            else:
-                total = cells_df.count()
-            cells_df = self._apply_order(cells_df, spec.order, list(spec.drilldown))
-            cells = [r.asDict() for r in
-                     self._paginate(cells_df, spec.page, spec.pagesize).collect()]
-        finally:
-            both.unpersist()
-        summary = summary_row[0].asDict() if summary_row else {}
-        if approx_total:
-            summary.pop("__acc__", None)
+        if spec.drilldown:
+            count = F.approx_count_distinct if approx_total else F.count_distinct
+            aggs.append(count(F.struct(*spec.drilldown)).alias("total_cell_count"))
+        summary = (self._apply_cuts(self._cell(cube), spec).agg(*aggs)
+                   .collect()[0].asDict())
+        total = summary.pop("total_cell_count", 0)
+        cells = ([r.asDict() for r in self.cells(spec).collect()]
+                 if spec.drilldown else [])
         return {"summary": summary, "cells": cells, "total_cell_count": total}
 
     def with_total_percentage(self, spec: QuerySpec, aggregate: str,

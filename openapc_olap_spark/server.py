@@ -14,8 +14,11 @@ can host it) exposing the reference's API over the Spark-backed QueryEngine:
     GET /cube/<c>/cell              cut echo + summary
 
 Responses carry CORS (olap_server.py:4,8) and respect the hard 500-row cap
-(slicer.ini:6). The Spark driver is the web process; executors do the work —
-the same topology as the reference's server→PostgreSQL split (SURVEY.md §3.1).
+(slicer.ini:6). A malformed parameter or a cut/drilldown/order field the
+cube's model does not declare is a 400; an unknown cube, route, dimension or
+fact a 404; any other failure a 500. Error bodies are ``{"error": ...}``.
+The Spark driver is the web process; executors do the work — the same
+topology as the reference's server→PostgreSQL split (SURVEY.md §3.1).
 """
 
 from __future__ import annotations
@@ -59,11 +62,11 @@ class SlicerApp:
             body, content_type = self._route(path, params)
             status = "200 OK"
         except HttpError as e:
-            body = json.dumps({"error": e.message}).encode()
-            content_type, status = "application/json", e.status
-        except KeyError as e:
-            body = json.dumps({"error": f"not found: {e}"}).encode()
-            content_type, status = "application/json", "404 Not Found"
+            body, content_type = self._json({"error": e.message})
+            status = e.status
+        except Exception as e:         # an engine fault, never the client's
+            body, content_type = self._json({"error": f"internal error: {e}"})
+            status = "500 Internal Server Error"
         start_response(status, [
             ("Content-Type", content_type),
             ("Content-Length", str(len(body))),
@@ -100,14 +103,35 @@ class SlicerApp:
         return (json.dumps(obj, default=_json_default).encode(),
                 "application/json")
 
+    @staticmethod
+    def _csv(rows: list[dict], fieldnames: list[str]) -> tuple[bytes, str]:
+        buf = io.StringIO()
+        writer = csv.DictWriter(buf, fieldnames=fieldnames)
+        writer.writeheader()
+        writer.writerows(rows)
+        return buf.getvalue().encode(), "text/csv"
+
     def _spec(self, cube: str, q: dict) -> QuerySpec:
+        """Parse the query parameters; a malformed value or a cut,
+        drilldown or order field the cube's model does not declare is a
+        client error."""
         try:
-            return QuerySpec.from_params(
+            spec = QuerySpec.from_params(
                 cube, cut=q.get("cut"), drilldown=q.get("drilldown"),
                 order=q.get("order"), page=q.get("page"),
                 pagesize=q.get("pagesize"))
         except Exception as e:
             raise HttpError("400 Bad Request", f"bad query: {e}") from e
+        c = self.registry.get(cube)
+        declared = {*c.dimensions, *c.measures, c.fact_id,
+                    *(a.name for a in c.aggregates)}
+        unknown = [f for f in [*(cut.dim for cut in spec.cuts),
+                               *spec.drilldown, *(t.field for t in spec.order)]
+                   if f not in declared]
+        if unknown:
+            raise HttpError("400 Bad Request",
+                            f"cube {cube!r} declares no field {unknown[0]!r}")
+        return spec
 
     # -- endpoints ----------------------------------------------------------
 
@@ -118,18 +142,13 @@ class SlicerApp:
         df = self.engine.facts(self._spec(name, q))
         rows = [r.asDict() for r in df.collect()]
         if q.get("format") == "csv":                       # S7 CSV export
-            buf = io.StringIO()
-            writer = csv.DictWriter(buf, fieldnames=df.columns)
-            writer.writeheader()
-            writer.writerows(rows)
-            return buf.getvalue().encode(), "text/csv"
+            return self._csv(rows, df.columns)
         return self._json(rows)
 
     def _aggregate(self, name: str, q: dict) -> tuple[bytes, str]:
         spec = self._spec(name, q)
         # ?approx_total=1 -> total_cell_count via approx_count_distinct
-        # on the same grouping-sets pass (the 100 TB drilldown knob;
-        # Q11 envelope semantics otherwise unchanged)
+        # (Q11 envelope semantics otherwise unchanged)
         approx = str(q.get("approx_total", "")).lower() in ("1", "true")
         env = self.engine.aggregate_envelope(spec, approx_total=approx)
         env["cell"] = [c.to_string() for c in spec.cuts]
@@ -139,21 +158,13 @@ class SlicerApp:
             # (or the lone summary row when there is no drilldown) —
             # completes the S7 surface beyond facts (VERDICT r06 item 6)
             rows = env["cells"] or [env["summary"]]
-            buf = io.StringIO()
-            writer = csv.DictWriter(buf, fieldnames=list(rows[0].keys()))
-            writer.writeheader()
-            writer.writerows(rows)
-            return buf.getvalue().encode(), "text/csv"
+            return self._csv(rows, list(rows[0]))
         return self._json(env)
 
     def _members(self, name: str, dim: str, q: dict) -> tuple[bytes, str]:
+        spec = self._spec(name, q)
         try:
-            page = int(q["page"]) if "page" in q else None
-            pagesize = int(q["pagesize"]) if "pagesize" in q else None
-        except ValueError as e:
-            raise HttpError("400 Bad Request", f"bad query: {e}") from e
-        try:
-            df = self.engine.members(name, dim, page, pagesize)
+            df = self.engine.members(name, dim, spec.page, spec.pagesize)
         except ValueError as e:        # unknown cube / dimension
             raise HttpError("404 Not Found", str(e)) from e
         return self._json([r[dim] for r in df.collect()])

@@ -77,13 +77,21 @@ def test_summary_no_drilldown(engine):
 def test_count_is_row_count(engine, spark):
     """cubes `count` counts cell rows even when the measure is NULL (A2)."""
     spark.createDataFrame(
-        [("X", None), ("X", 5.0)], ["institution", "euro"]
+        [("X", None, None), ("X", 5.0, "2020")],
+        ["institution", "euro", "period"]
     ).createOrReplaceTempView("nullm")
     reg = CubeRegistry()
-    reg.register(Cube("nullm", "nullm", ("institution",), ("euro",),
+    reg.register(Cube("nullm", "nullm", ("institution", "period"), ("euro",),
                       (Aggregate("n", "euro", "count"),)))
     eng = QueryEngine(spark, reg)
     assert eng.cells(QuerySpec.from_params("nullm")).collect()[0]["n"] == 2
+    # a NULL drilldown value is a group: among the cells and in
+    # total_cell_count, on the exact and the approx_total path
+    spec = QuerySpec.from_params("nullm", drilldown="period")
+    for approx in (False, True):
+        env = eng.aggregate_envelope(spec, approx_total=approx)
+        assert [c["period"] for c in env["cells"]] == [None, "2020"]
+        assert env["total_cell_count"] == 2
 
 
 def test_stddev_single_row_is_null(engine):
@@ -107,12 +115,27 @@ def test_envelope_with_cut(engine):
         "mini", cut="is_hybrid:TRUE", drilldown="institution"))
     assert env["summary"]["num_items"] == 4
     assert env["total_cell_count"] == 3
+    # a drilldown over an empty cell serves the /cell summary (count 0,
+    # sums null), no cells and a zero total
+    cut = "institution:Nobody"
+    cell = engine.cells(QuerySpec.from_params("mini", cut=cut)).collect()
+    env = engine.aggregate_envelope(QuerySpec.from_params(
+        "mini", cut=cut, drilldown="period"))
+    assert env == {"summary": cell[0].asDict(), "cells": [],
+                   "total_cell_count": 0}
+    assert env["summary"]["num_items"] == 0
+    assert env["summary"]["amount_sum"] is None
+    # without a drilldown, paging params do not page the summary away
+    env = engine.aggregate_envelope(QuerySpec.from_params(
+        "mini", cut="is_hybrid:TRUE", page=1))
+    assert env["summary"]["num_items"] == 4
+    assert env["cells"] == [] and env["total_cell_count"] == 0
 
 
 def test_envelope_approx_total(engine):
-    """VERDICT r05 item 9: approx_total rides an approx_count_distinct of
-    the drilldown tuple on the SAME grouping-sets pass (no extra count
-    job); cells and summary are identical to the exact path, the helper
+    """VERDICT r05 item 9: approx_total counts the drilldown tuples with
+    approx_count_distinct on the summary aggregate (no extra count job);
+    cells and summary are identical to the exact path, the helper
     column never leaks, and HLL++ is exact at small cardinality."""
     spec = QuerySpec.from_params(
         "mini", drilldown="institution", order="amount_sum:desc")
@@ -123,6 +146,12 @@ def test_envelope_approx_total(engine):
     assert approx["total_cell_count"] == exact["total_cell_count"] == 3
     assert "__acc__" not in approx["summary"]
     assert all("__acc__" not in c for c in approx["cells"])
+    # no helper column leaks on either path: the summary holds exactly
+    # the declared aggregates, each cell the drilldown plus those
+    names = {"amount_sum", "num_items", "amount_avg", "amount_stddev"}
+    for env in (exact, approx):
+        assert set(env["summary"]) == names
+        assert all(set(c) == names | {"institution"} for c in env["cells"])
 
 
 def test_pagination_partition_property(engine):

@@ -75,7 +75,7 @@ def test_aggregate_envelope(app):
     assert [c["period"] for c in env["cells"]] == ["2019", "2020", "2021"]
     assert env["cells"][1]["amount_sum"] == 500.0
     assert env["drilldown"] == ["period"]
-    # ?approx_total=1 rides the same grouping-sets pass; identical
+    # ?approx_total=1 rides the summary aggregate; identical
     # envelope at this cardinality (HLL++ exact when tiny) and the
     # helper column never leaks into the response
     _, _, body2 = call(app, "/cube/srv/aggregate",
@@ -83,6 +83,10 @@ def test_aggregate_envelope(app):
     env2 = json.loads(body2)
     assert env2 == env
     assert "__acc__" not in json.dumps(env2)
+    for e in (env, env2):
+        assert set(e["summary"]) == {"amount_sum", "num_items"}
+        assert all(set(c) == {"amount_sum", "num_items", "period"}
+                   for c in e["cells"])
     # pagination + approx_total compose (VERDICT r10 #7): cells are the
     # requested page while total_cell_count stays the FULL cardinality —
     # the 10^8-group-safe contract (500-cap pages + HLL total)
@@ -93,6 +97,17 @@ def test_aggregate_envelope(app):
     assert [c["period"] for c in env3["cells"]] == ["2021"]
     assert env3["total_cell_count"] == 3
     assert env3["summary"] == env["summary"]
+    # a drilldown over an empty cell serves the same summary as /cell
+    _, _, body = call(app, "/cube/srv/aggregate",
+                      "cut=institution:Nobody&drilldown=period")
+    empty = json.loads(body)
+    _, _, body = call(app, "/cube/srv/cell", "cut=institution:Nobody")
+    assert empty["summary"] == json.loads(body)["summary"] == {
+        "amount_sum": None, "num_items": 0}
+    assert empty["cells"] == [] and empty["total_cell_count"] == 0
+    # no drilldown: page=1 still returns the summary
+    _, _, body = call(app, "/cube/srv/aggregate", "page=1")
+    assert json.loads(body)["summary"]["amount_sum"] == 1000.0
 
 
 def test_members_fact_cell_and_errors(app):
@@ -118,6 +133,47 @@ def test_members_fact_cell_and_errors(app):
     assert status.startswith("400")
     status, _, _ = call(app, "/cube/srv/members/institution", "pagesize=1.5")
     assert status.startswith("400")
+
+
+def test_undeclared_field_is_400(app):
+    """A cut, drilldown or order field the cube's model does not declare
+    is a client error, named in the JSON body."""
+    for path, query in [
+            ("/cube/srv/facts", "cut=nope:1"),
+            ("/cube/srv/aggregate", "drilldown=nope"),
+            ("/cube/srv/aggregate", "drilldown=period&order=nope:desc"),
+            ("/cube/srv/cell", "cut=!nope:1~2")]:
+        status, headers, body = call(app, path, query)
+        assert status.startswith("400"), (path, query)
+        assert headers["Content-Type"] == "application/json"
+        assert "'nope'" in json.loads(body)["error"]
+    # declared measures, aggregate names and the fact id stay usable
+    status, _, _ = call(app, "/cube/srv/facts", "order=euro:desc,fid")
+    assert status == "200 OK"
+    status, _, _ = call(app, "/cube/srv/aggregate",
+                        "drilldown=period&order=amount_sum")
+    assert status == "200 OK"
+
+
+def test_internal_error_is_500(app, spark, monkeypatch):
+    """An engine fault is a 500 with a JSON error body, never a 404 —
+    not even when it surfaces as a KeyError."""
+    reg = CubeRegistry()
+    reg.register(Cube(name="ghost", table="no_such_table",
+                      dimensions=("institution",), measures=("euro",),
+                      aggregates=(Aggregate("n", "euro", "count"),)))
+    status, headers, body = call(SlicerApp(QueryEngine(spark, reg)),
+                                 "/cube/ghost/aggregate")
+    assert status == "500 Internal Server Error"
+    assert headers["Content-Type"] == "application/json"
+    assert json.loads(body)["error"].startswith("internal error")
+
+    def boom(spec):
+        raise KeyError("lost")
+    monkeypatch.setattr(app.engine, "facts", boom)
+    status, _, body = call(app, "/cube/srv/facts")
+    assert status == "500 Internal Server Error"
+    assert "lost" in json.loads(body)["error"]
 
 
 def test_empty_result_is_empty_list(app):
