@@ -14,15 +14,17 @@ Everything is built-in Column expressions, so Catalyst gets the whole plan:
 cuts push down to the Parquet scan and aggregates are partial+final hash
 aggs. The summary+cells envelope is two plain plans over the cut cell: a
 global aggregate (summary and cell count) and the grouped, ordered, paged
-cells. Nothing is cached between them.
+cells, run side by side. Nothing is cached between them.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from openapc_olap_spark.cuts import Cut, cuts_to_predicate, parse_cuts
 from openapc_olap_spark.model import Cube
@@ -180,18 +182,23 @@ class QueryEngine:
         the distinct drilldown tuples as ``total_cell_count`` (NULL values
         form a group, as in the cells' group-by), exactly or, with
         ``approx_total=True``, by ``approx_count_distinct`` (HLL++, ~2% rsd);
-        the cells are the :meth:`cells` plan (order, then page).
+        the cells are the :meth:`cells` plan (order, then page), run at the
+        same time as the summary.
         """
         cube = self.registry.get(spec.cube)
         aggs = [a.to_column() for a in cube.aggregates]
         if spec.drilldown:
             count = F.approx_count_distinct if approx_total else F.count_distinct
             aggs.append(count(F.struct(*spec.drilldown)).alias("total_cell_count"))
-        summary = (self._apply_cuts(self._cell(cube), spec).agg(*aggs)
-                   .collect()[0].asDict())
+        summary_df = self._apply_cuts(self._cell(cube), spec).agg(*aggs)
+        # the two plans share nothing, so the cells job runs beside the
+        # summary job, in a thread that keeps the caller's job group
+        with ThreadPoolExecutor(1) as pool:
+            pending = (pool.submit(inheritable_thread_target(self.spark)(
+                self.cells(spec).collect)) if spec.drilldown else None)
+            summary = summary_df.collect()[0].asDict()
+            cells = [r.asDict() for r in pending.result()] if pending else []
         total = summary.pop("total_cell_count", 0)
-        cells = ([r.asDict() for r in self.cells(spec).collect()]
-                 if spec.drilldown else [])
         return {"summary": summary, "cells": cells, "total_cell_count": total}
 
     def with_total_percentage(self, spec: QuerySpec, aggregate: str,

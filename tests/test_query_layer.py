@@ -108,6 +108,21 @@ def test_envelope(engine):
     assert [c["institution"] for c in env["cells"]] == ["Uni B", "Uni A", "uni a"]
     # drilldowns never filter; cuts never change grain
     assert sum(c["num_items"] for c in env["cells"]) == env["summary"]["num_items"]
+    # the cells job, run beside the summary job in another thread, carries
+    # the caller's job group: the envelope adds no job outside the group
+    sc = engine.spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("test-envelope", "test-envelope")
+    try:
+        engine.aggregate_envelope(QuerySpec.from_params(
+            "mini", drilldown="institution", order="amount_sum:desc"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(tracker.getJobIdsForGroup("test-envelope")) >= 2
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
 def test_envelope_with_cut(engine):
